@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.json4s.{DefaultFormats, Extraction, Formats, JArray, JNothing, JObject, JValue}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -42,22 +42,30 @@ final case class ScoringModel(
     * online inference (model served against the low-latency store,
     * reference README.md:110-116). Features come from the store's
     * broadcast point index ([[graft.fs.FeatureResolver.lookupOne]]) — an
-    * in-memory hash probe after warm-up, no per-call table scan — and the
-    * model transforms a single local row. Missing keys contribute nulls,
-    * exactly scoreBatch's left-join semantics.
+    * in-memory hash probe after warm-up, no per-call table scan. Missing
+    * keys contribute nulls, exactly scoreBatch's left-join semantics.
+    *
+    * The model then runs on the driver, compiled once per model
+    * ([[LocalPipeline]]): a call costs one point-index probe per lookup plus
+    * driver-side index lookups, vector assembly and tree evaluation —
+    * tens of microseconds warm, no Spark plan and no job. The row equals
+    * what `model.transform` returns for the same one-row frame, schema and
+    * column order included. Accepted stages are the ones [[Trainer.pipeline]]
+    * emits: `StringIndexerModel` and `VectorAssembler` (both with
+    * `handleInvalid = "keep"`) and `GBTClassificationModel`; any other stage
+    * fails with an [[IllegalArgumentException]] naming it, and such a
+    * pipeline scores through [[scoreBatch]].
     *
     * Deviation, by design: the reference's <10 ms figure is a managed KV
-    * service + model server; here the per-call cost is one local-row Spark
-    * plan (milliseconds-scale, not micro) — the in-scope batch analog,
-    * not a serving replacement. Point-in-time lookups need the full as-of
+    * service + model server; this is the in-scope in-process analog, not a
+    * serving replacement. Point-in-time lookups need the full as-of
     * machinery — use [[scoreBatch]] for those. */
   def scoreOne(store: FeatureResolver, input: Map[String, Any]): Option[Row] = {
     require(lookups.forall(_.timestampLookupKey.isEmpty),
       "scoreOne supports untimed lookups only — point-in-time enrichment needs scoreBatch")
-    val spark = SparkSession.active
     val inputSeq = input.toSeq
     val inputFields = inputSeq.map { case (k, v) =>
-      StructField(k, ScoringModel.typeOf(v), nullable = true) }
+      StructField(k, ScoringModel.typeOf(k, v), nullable = true) }
     val featParts = lookups.map { lk =>
       val keyValue = input.getOrElse(lk.lookupKey,
         sys.error(s"scoreOne: input is missing lookup key '${lk.lookupKey}'"))
@@ -69,13 +77,11 @@ final case class ScoringModel(
         rowOpt.map(r => r.get(r.fieldIndex(f))).orNull }
       (fields, values)
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      inputFields ++ featParts.flatMap(_._1))
-    val row = Row.fromSeq(inputSeq.map(_._2) ++ featParts.flatMap(_._2))
-    val df = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
-    model.transform(df).collect().headOption
+    val schema = StructType(inputFields ++ featParts.flatMap(_._1))
+    Some(local.score(schema, inputSeq.map(_._2) ++ featParts.flatMap(_._2)))
   }
+
+  @transient private lazy val local = new LocalPipeline(model)
 
   /** Lossless lookup persistence (hint and renames included) with a real
     * JSON writer — names containing quotes/commas survive the round-trip.
@@ -109,15 +115,17 @@ object ScoringModel {
 
   private[ml] implicit val jsonFormats: Formats = DefaultFormats
 
-  /** Runtime Scala value -> Spark type, for assembling scoreOne's
-    * single-row frame from a plain Map (the key/passthrough columns; the
-    * feature columns take their types from the table schema). */
-  private[ml] def typeOf(v: Any): org.apache.spark.sql.types.DataType = {
+  /** Runtime Scala value -> Spark type of a scoreOne input column (the
+    * key/passthrough columns; the feature columns take their types from the
+    * table schema). Values of any other class are refused here, naming the
+    * key, rather than scored under a wrong type. */
+  private[ml] def typeOf(key: String, v: Any): org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     v match {
       case _: java.lang.Integer => IntegerType
       case _: java.lang.Long => LongType
       case _: java.lang.Short => ShortType
+      case _: java.lang.Byte => ByteType
       case _: java.lang.Double => DoubleType
       case _: java.lang.Float => FloatType
       case _: java.lang.Boolean => BooleanType
@@ -125,12 +133,15 @@ object ScoringModel {
       case _: scala.math.BigDecimal => DecimalType(38, 18)
       case _: java.sql.Timestamp => TimestampType
       case _: java.sql.Date => DateType
+      case _: String => StringType
       case null => throw new IllegalArgumentException(
         "scoreOne input values must be non-null: a null carries no runtime " +
           "type, so the single-row frame would get a wrong (string) schema " +
           "and fail later inside the pipeline with a confusing cast error. " +
           "Pass a typed value, or drop the column and let the lookup fill it.")
-      case _ => StringType
+      case other => throw new IllegalArgumentException(
+        s"scoreOne input '$key' has unsupported type ${other.getClass.getName}: pass a " +
+          "String, a boxed number or Boolean, a BigDecimal, a java.sql.Timestamp or a java.sql.Date")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.functions.col
 
@@ -113,16 +114,18 @@ class TrainerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("scoreOne matches scoreBatch for the same key (online-analog parity)") {
     val scoring = ScoringModel(model, lookups)
     val inference = CsvIngest.readInferred(spark, refData("inference_data.csv"))
-    val sample = inference.limit(3).collect()
-    val batch = scoring.scoreBatch(store, inference)
-      .select("customer_id", "product_id", "prediction").collect()
-      .map(r => (r.get(0), r.get(1)) -> r.getDouble(2)).toMap
-    sample.foreach { r =>
-      val input = r.schema.fieldNames.map(n => n -> r.get(r.fieldIndex(n))).toMap
+    val batch = scoring.scoreBatch(store, inference).limit(3).collect()
+    // scoreBatch's using-joins move each lookup key to the front; scoreOne
+    // gets its input columns in that order, so whole rows are comparable.
+    val inputCols = batch.head.schema.fieldNames.filter(inference.columns.contains)
+    batch.foreach { b =>
+      val input = ListMap(inputCols.toSeq.map(n => n -> b.get(b.fieldIndex(n))): _*)
       val one = scoring.scoreOne(store, input)
         .getOrElse(fail(s"scoreOne returned nothing for $input"))
-      assert(one.getDouble(one.fieldIndex("prediction")) ==
-        batch((input("customer_id"), input("product_id"))))
+      // Every key hits, so no NaN: plain Row equality covers features,
+      // rawPrediction, probability and prediction.
+      assert(one.schema == b.schema)
+      assert(one == b, s"scoreOne $one != scoreBatch $b")
     }
   }
 
